@@ -1,7 +1,16 @@
 package graft.ingest
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.io.ColumnIOFactory
+import org.apache.parquet.schema.PrimitiveType
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetCompressionCodec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -20,15 +29,26 @@ import org.apache.spark.sql.types.StructType
   *     staging deterministically, which upgrades the reference's
   *     at-most-once cursor (SURVEY.md §2.A#17) to exactly-once;
   *  2. every range strictly below the high-water range is complete
-  *     (rotation-on-boundary-crossing, writer.go:127-144): merge its
-  *     staged epochs, sort by block, publish as ONE atomically-renamed
-  *     range-named file; re-publish is a no-op (completed-range guard);
+  *     (rotation-on-boundary-crossing, writer.go:127-144): publish it as
+  *     ONE atomically-renamed, block-sorted, range-named file; re-publish
+  *     is a no-op (completed-range guard). A range staged by one epoch
+  *     is renamed as is. A range staged by several epochs is merged on
+  *     the driver: their files are streamed in epoch order through one
+  *     parquet-mr writer, which is block order when the files share one
+  *     schema and the block column never decreases along the way. Any
+  *     other multi-epoch range (schema evolution mid-range, several part
+  *     files in an epoch, blocks out of order) is merged by a Spark job
+  *     that unions the schemas and sorts;
   *  3. ranges with no data between `start` and the high-water mark get
   *     empty files (dense, gapless backfill).
   *
   * Scale: the range is the parallelism unit — publishing K complete
-  * ranges is K independent single-range jobs, and the one-file-per-range
-  * coalesce costs parallelism only within a range (SURVEY.md §7.4.2).
+  * ranges is K independent single-range publishes, and the
+  * one-file-per-range merge costs parallelism only within a range
+  * (SURVEY.md §7.4.2). The driver-side merge reads every staged byte of
+  * the range through the driver and buffers up to one row group
+  * (`parquet.block.size`) on its heap, for each of up to 8 ranges
+  * published at once, where the Spark merge does it on an executor.
   * Ordered-merge heaps and upload workers (§2.A#14/#18) are unnecessary:
   * epochs are totally ordered and rename-publish is the committer.
   */
@@ -45,12 +65,28 @@ final case class ParquetTuning(
     pageSizeBytes: Option[Long] = None,     // writer.go:104-106 (0=default)
     compressionLevel: Option[Int] = None) { // writer.go:96-98; parquet-mr
                                             // honors it for zstd (and gzip)
+  private def levelKey = s"parquet.compression.codec.$compression.level"
+
   def options: Map[String, String] = Map(
     "compression" -> compression,
     "parquet.enable.dictionary" -> dictionaryEncoding.toString) ++
     rowGroupBytes.map("parquet.block.size" -> _.toString) ++
     pageSizeBytes.map("parquet.page.size" -> _.toString) ++
-    compressionLevel.map(l => s"parquet.compression.codec.$compression.level" -> l.toString)
+    compressionLevel.map(l => levelKey -> l.toString)
+
+  /** The same settings on a parquet-mr writer builder, for files written
+    * outside Spark. Each one is set explicitly: the builder takes none of
+    * them from the Configuration it is given. */
+  def applyTo(b: ExampleParquetWriter.Builder): ExampleParquetWriter.Builder = {
+    // the codec Spark's `compression` option names, by Spark's own table
+    val codec = ParquetCompressionCodec.fromString(compression).getCompressionCodec
+    var out = b.withCompressionCodec(codec)
+      .withDictionaryEncoding(dictionaryEncoding)
+    rowGroupBytes.foreach(n => out = out.withRowGroupSize(n))
+    pageSizeBytes.foreach(n => out = out.withPageSize(n.toInt))
+    compressionLevel.foreach(l => out = out.config(levelKey, l.toString))
+    out
+  }
 }
 
 final case class RangeSink(
@@ -107,7 +143,10 @@ final case class RangeSink(
   private def stageEpoch(df: DataFrame, epochId: Long): Seq[Long] = {
     df.withColumn("__range", rangeExpr)
       .repartition(col("__range"))
-      .sortWithinPartitions(col(blockCol))
+      // led by __range: the partitioned write needs its rows grouped by
+      // __range and, were this sort not led by it, would sort them by
+      // __range alone — and the optimizer would drop this block sort
+      .sortWithinPartitions(col("__range"), col(blockCol))
       .write.mode("overwrite").partitionBy("__range")
       .options(tuning.options)
       .parquet(s"$root/_open/epoch=$epochId")
@@ -131,6 +170,94 @@ final case class RangeSink(
       finalizeBelow(df.sparkSession, df.schema, ranges.max + partitioner.size)
   }
 
+  private def partFilesOf(f: FileSystem, dir: Path): Seq[Path] =
+    f.listStatus(dir).map(_.getPath).toSeq
+      .filter(p => p.getName.startsWith("part-") &&
+        p.getName.endsWith(".parquet"))
+
+  /** Merge a range's staged epoch dirs into the single file `tmp` on the
+    * driver, with no Spark job: each staged file is read through
+    * parquet-mr and its rows are re-encoded, in epoch order, into one
+    * writer, so row groups and dictionaries span epochs as in a single
+    * write (concatenating the epochs' row groups instead would keep a
+    * row group and a dictionary per epoch, and more bytes per block).
+    * The copy is sorted when the block column never decreases from row
+    * to row, within and across files — checked, not assumed: staging
+    * written before staging sorted by block, and restaged on replay, may
+    * be unsorted within a file. Returns false, leaving no `tmp`, unless
+    * every epoch dir holds one part file, all share one Parquet schema
+    * with an int64 block column and the blocks come in order. */
+  private def mergeOnDriver(
+      f: FileSystem, conf: Configuration, dirs: Seq[Path], tmp: Path): Boolean = {
+    // numeric epoch order: as strings, epoch=10 sorts before epoch=9
+    val files = dirs.sortBy(_.getParent.getName.stripPrefix("epoch=").toLong)
+      .map(partFilesOf(f, _))
+    if (!files.forall(_.size == 1)) return false
+    val inputs = files.map(fs => HadoopInputFile.fromPath(fs.head, conf))
+    // options from the session's conf: the default options build a
+    // fresh Configuration, which re-parses Hadoop's XML resources
+    val options = HadoopReadOptions.builder(conf).build()
+    // one staged file open at a time, here and in the copy below: a range
+    // at the chain head can be staged by thousands of one-block epochs,
+    // and a stream held per epoch would exhaust file descriptors or an
+    // object store's connection pool
+    val footers = inputs.map { in =>
+      val s = in.newStream()
+      try ParquetFileReader.readFooter(in, options, s) finally s.close()
+    }
+    val meta = footers.head.getFileMetaData
+    val schema = meta.getSchema
+    if (footers.exists(_.getFileMetaData.getSchema != schema)) return false
+    val blockAt = schema.getFieldIndex(blockCol)
+    val blockType = schema.getType(blockAt)
+    if (!blockType.isPrimitive || blockType.asPrimitiveType.getPrimitiveTypeName !=
+        PrimitiveType.PrimitiveTypeName.INT64) return false
+    // a Spark merge that crashed leaves a directory, which no
+    // overwriting create replaces
+    if (f.exists(tmp) && f.getFileStatus(tmp).isDirectory) f.delete(tmp, true)
+    val writer = tuning.applyTo(
+      ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
+        // a copy: the session's settings apply as they do to a Spark
+        // write, and applyTo's config() must not write into the session
+        .withConf(new Configuration(conf))
+        .withType(schema)
+        // a crashed merge's leftover file is replaced
+        .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
+        // Spark's row metadata (its schema, writer version) travels along
+        .withExtraMetaData(meta.getKeyValueMetaData))
+      .build()
+    val columns = new ColumnIOFactory().getColumnIO(schema)
+    var sorted = true
+    var prev = Long.MinValue
+    try {
+      val it = inputs.iterator.zip(footers.iterator)
+      while (sorted && it.hasNext) {
+        val (in, footer) = it.next()
+        val r = ParquetFileReader.open(in, footer, options, in.newStream())
+        try {
+          var pages = r.readNextRowGroup()
+          while (sorted && pages != null) {
+            val rows = columns.getRecordReader(pages,
+              new GroupRecordConverter(schema))
+            var i = 0L
+            while (sorted && i < pages.getRowCount) {
+              val row = rows.read()
+              // a null block sorts first in the Spark merge, not here
+              sorted = row.getFieldRepetitionCount(blockAt) == 1 &&
+                row.getLong(blockAt, 0) >= prev
+              if (sorted) { prev = row.getLong(blockAt, 0); writer.write(row) }
+              i += 1
+            }
+            pages = if (sorted) r.readNextRowGroup() else null
+          }
+        } finally r.close()
+      }
+    } finally writer.close()
+    // out of order: drop the partial copy, the Spark merge sorts
+    if (!sorted) f.delete(tmp, false)
+    sorted
+  }
+
   /** Publish every complete range with rangeStart < highWater, plus empty
     * backfill files for data-less ranges.
     *
@@ -138,14 +265,19 @@ final case class RangeSink(
     *  - a range staged by a single epoch already IS one sorted parquet
     *    file (stage repartitions by range and sorts within partitions) —
     *    publishing it is a pure filesystem rename, no job;
+    *  - a range staged by several epochs whose files share one schema
+    *    and hold their blocks in epoch order is merged on the driver
+    *    through parquet-mr ([[mergeOnDriver]]), then renamed, no job;
     *  - empty backfill writes ONE template file and FS-copies it per
     *    missing range (writer.go:246-267 analog), no job per range;
-    *  - only ranges spanning multiple epochs need a merge job.
+    *  - only a multi-epoch range whose epochs differ in schema, hold
+    *    several part files or hold blocks out of order needs a merge job.
     * At scale this makes publishing K ranges O(K) namenode ops, not K
     * scheduled jobs. */
   private def finalizeBelow(
       spark: SparkSession, schema: StructType, highWater: Long): Unit = {
     val f = fs(spark)
+    val conf = spark.sparkContext.hadoopConfiguration
     val done = publishedRanges(spark)
     // staged ranges present in any epoch dir
     val openDir = new Path(s"$root/_open")
@@ -155,14 +287,15 @@ final case class RangeSink(
         .map(_.getPath)
         .groupBy(p => p.getName.stripPrefix("__range=").toLong)
         .view.mapValues(_.toSeq).toMap
+    // a replayed epoch restages ranges it published before the crash;
+    // the published file is final, so that staging is dead — and no
+    // publish below would ever delete it
+    stagedRanges.foreach { case (rs, dirs) =>
+      if (done.contains(rs)) dirs.foreach(f.delete(_, true))
+    }
     val todo = partitioner.rangeStartsUpTo(highWater - 1)
       .filterNot(done.contains).filter(_ < highWater)
     if (todo.isEmpty) return
-
-    def partFilesOf(dir: Path): Seq[Path] =
-      f.listStatus(dir).map(_.getPath).toSeq
-        .filter(p => p.getName.startsWith("part-") &&
-          p.getName.endsWith(".parquet"))
 
     // lazy empty template, written at most once per finalize pass
     lazy val emptyTemplate: Path = {
@@ -171,7 +304,7 @@ final case class RangeSink(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
         .coalesce(1).write.mode("overwrite").options(tuning.options)
         .parquet(tmplDir.toString)
-      partFilesOf(tmplDir).head
+      partFilesOf(f, tmplDir).head
     }
     val usedTemplate = new java.util.concurrent.atomic.AtomicBoolean(false)
 
@@ -200,31 +333,36 @@ final case class RangeSink(
         val (_, re) = partitioner.rangeFor(rs)
         val target = new Path(root, partitioner.fileName(rs, re))
         stagedRanges.get(rs) match {
-          case Some(Seq(dir)) if partFilesOf(dir).size == 1 =>
+          case Some(Seq(dir)) if partFilesOf(f, dir).size == 1 =>
             // fast path: already one sorted file — rename-publish, no job
-            if (!f.exists(target)) renameOrDie(partFilesOf(dir).head, target)
+            if (!f.exists(target)) renameOrDie(partFilesOf(f, dir).head, target)
           case Some(dirs) =>
-            // merge path: range spans epochs — one small job. mergeSchema,
-            // NOT the current batch's schema: when the range straddles a
-            // schema-evolution boundary (descriptor gained/dropped a field
-            // between epochs), forcing the newest schema would silently
-            // drop the older epochs' column values from the published file
             val tmp = new Path(root,
               s".${partitioner.fileName(rs, re)}.inprogress")
-            spark.read.option("mergeSchema", "true")
-              .parquet(dirs.map(_.toString): _*)
-              .coalesce(1).sortWithinPartitions(col(blockCol))
-              .write.mode("overwrite").options(tuning.options)
-              .parquet(tmp.toString)
-            if (!f.exists(target)) renameOrDie(partFilesOf(tmp).head, target)
+            if (!f.exists(target)) {
+              if (mergeOnDriver(f, conf, dirs, tmp)) renameOrDie(tmp, target)
+              else {
+                // Spark merge: one small job. mergeSchema, NOT the current
+                // batch's schema: when the range straddles a
+                // schema-evolution boundary (descriptor gained/dropped a
+                // field between epochs), forcing the newest schema would
+                // silently drop the older epochs' column values from the
+                // published file
+                spark.read.option("mergeSchema", "true")
+                  .parquet(dirs.map(_.toString): _*)
+                  .coalesce(1).sortWithinPartitions(col(blockCol))
+                  .write.mode("overwrite").options(tuning.options)
+                  .parquet(tmp.toString)
+                renameOrDie(partFilesOf(f, tmp).head, target)
+              }
+            }
             f.delete(tmp, true)
           case None =>
             // empty backfill: FS copy of the 0-row template
             if (!f.exists(target)) {
               usedTemplate.set(true)
               org.apache.hadoop.fs.FileUtil.copy(
-                f, emptyTemplate, f, target, false, spark.sparkContext
-                  .hadoopConfiguration)
+                f, emptyTemplate, f, target, false, conf)
             }
         }
         // staging is dropped only once the published file is confirmed

@@ -226,7 +226,10 @@ object TableLog {
           Some(true)
         } catch {
           case _: java.nio.file.FileAlreadyExistsException => Some(false)
-          case _: UnsupportedOperationException => None // no-link fs
+          // no link support: unsupported, or refused by the filesystem
+          // (EPERM, overlay/NFS quirks) — publish by rename instead
+          case _: UnsupportedOperationException => None
+          case _: java.nio.file.FileSystemException => None
         }
       } else None
     linked match {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * maintenance pass that closes the lakehouse loop (ingest →
   * optimize/upsert → vacuum). RangeSink's commit protocol is
   * rename-publish with staging kept until the published file is
-  * confirmed (RangeSink.scala:229-236), so a crash can strand four
+  * confirmed (RangeSink.publish), so a crash can strand four
   * kinds of garbage, each safe to remove only under its own proof:
   *
   *  - `_open/epoch=N/__range=X/` staging whose range X already
@@ -16,10 +16,11 @@ import org.apache.spark.sql.SparkSession
   *    UNPUBLISHED range is replayable state and is always kept, at
   *    any age: deleting it would turn the next checkpoint replay's
   *    fast rename-publish into data loss.
-  *  - `.<range>.inprogress/` merge temps (crash between the merge
-  *    job and rename): dead once their target exists; without a
-  *    target they are rewritten `mode("overwrite")` on replay, so
-  *    they fall to the retention clock instead.
+  *  - `.<range>.inprogress` merge temps, a file from the driver-side
+  *    merge or a directory from the Spark merge (crash between the
+  *    merge and rename): dead once their target exists; without a
+  *    target they are overwritten on replay, so they fall to the
+  *    retention clock instead.
   *  - `._empty_template` (crash before the finalize-pass delete):
   *    lazily re-created, falls to the retention clock.
   *  - `_temporary/` committer droppings from a killed write job:
@@ -80,7 +81,7 @@ object Vacuum {
               }
             }
             // epoch dir left with no __range children: RangeSink's own
-            // droppings rule (RangeSink.scala:244-250), on the clock
+            // droppings rule (RangeSink.finalizeBelow), on the clock
             if (!dryRun && expired(ep) && !f.listStatus(ep.getPath)
                 .exists(_.getPath.getName.startsWith("__range=")))
               drop(ep.getPath)

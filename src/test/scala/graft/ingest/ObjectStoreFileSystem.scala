@@ -44,6 +44,11 @@ object ObjectStore {
   val multipartParts = new AtomicLong
   val copyOps = new AtomicLong
   val copiedBytes = new AtomicLong
+  /** Read streams open now, and the most ever open at once — a reader
+    * that holds a connection per object would exhaust a real store's
+    * pool. */
+  val openStreams = new AtomicLong
+  val maxOpenStreams = new AtomicLong
 
   def tick(): Long = clock.incrementAndGet()
 
@@ -51,6 +56,7 @@ object ObjectStore {
     keys.clear()
     multipartCompletes.set(0); multipartParts.set(0)
     copyOps.set(0); copiedBytes.set(0)
+    openStreams.set(0); maxOpenStreams.set(0)
   }
 }
 
@@ -108,6 +114,10 @@ class ObjectStoreFileSystem extends FileSystem {
 
   private final class ObjIn(bytes: Array[Byte]) extends FSInputStream {
     private var pos = 0
+    private var closed = false
+    override def close(): Unit = synchronized {
+      if (!closed) { closed = true; openStreams.decrementAndGet() }
+    }
     override def seek(p: Long): Unit = {
       if (p < 0 || p > bytes.length) throw new EOFException(s"seek $p")
       pos = p.toInt
@@ -128,6 +138,8 @@ class ObjectStoreFileSystem extends FileSystem {
   override def open(p: Path, bufferSize: Int): FSDataInputStream = {
     val o = keys.getOrElse(key(p),
       throw new FileNotFoundException(s"no object at ${key(p)}"))
+    maxOpenStreams.accumulateAndGet(openStreams.incrementAndGet(),
+      (a, b) => math.max(a, b))
     new FSDataInputStream(new ObjIn(o.bytes))
   }
 

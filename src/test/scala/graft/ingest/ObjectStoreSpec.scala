@@ -84,6 +84,40 @@ class ObjectStoreSpec extends SparkSuite {
     }
   }
 
+  test("RangeSink merges multi-epoch ranges on the driver through the object store") {
+    withStore {
+      val root = s"objstore:///sink-${System.nanoTime()}/main"
+      val sink = RangeSink(root, RangePartitioner(start = 0, size = 10))
+      def epoch(from: Long, until: Long) = Decode.mainFromDecoded(Decode.decoded(
+        SampleBlocks.blocksDF(spark, until - from, startBlock = from),
+        SampleBlocks.output))
+      // ranges 0 and 10 are each staged by two epochs; 20 stays open
+      val merges = RangeSinkSpec.sparkMerges(spark) {
+        Seq((0L, 4L), (4L, 13L), (13L, 25L)).zipWithIndex.foreach {
+          case ((from, until), e) => sink.processBatch(epoch(from, until), e)
+        }
+      }
+      assert(merges == 0, "both ranges must merge without a Spark job")
+
+      val fs = new Path(root).getFileSystem(
+        spark.sparkContext.hadoopConfiguration)
+      val names = fs.listStatus(new Path(root)).map(_.getPath.getName)
+        .filter(_.endsWith(".parquet")).sorted.toSeq
+      assert(names == Seq("0000000000-0000000010.parquet",
+        "0000000010-0000000020.parquet"))
+      val blocks = names.flatMap(n => spark.read.parquet(s"$root/$n")
+        .select("block_number").collect().map(_.getLong(0)))
+      assert(blocks == (0L until 20L))
+      // publishing renamed by copy+delete; no merge temp and no staging
+      // of a published range survives
+      assert(ObjectStore.copyOps.get() > 0)
+      val leftover = ObjectStore.keys.keysIterator.filter(k =>
+        k.contains(".inprogress") || k.contains("/__range=0/") ||
+          k.contains("/__range=10/")).toList
+      assert(leftover.isEmpty, s"merge temps or staging leaked: $leftover")
+    }
+  }
+
   test("failed publish keeps staging replayable (rename-reports-false path)") {
     withStore {
       val conf = spark.sparkContext.hadoopConfiguration

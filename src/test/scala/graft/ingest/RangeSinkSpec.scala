@@ -1,11 +1,42 @@
 package graft.ingest
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
+
+object RangeSinkSpec {
+  /** Spark merge jobs that `body` ran: RangeSink's job-based merge writes
+    * into `.<range>.parquet.inprogress`, and the plan of that write's SQL
+    * execution names the path. */
+  def sparkMerges(spark: SparkSession)(body: => Unit): Int = {
+    val seen = new AtomicInteger
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart
+            if s.physicalPlanDescription.contains(".parquet.inprogress") =>
+          seen.incrementAndGet()
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try { body; TestListenerBus.drain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    seen.get
+  }
+}
 
 /** Range-named sink fixtures (FIXTURES.md §B scenarios 1, 2, 4; SURVEY.md
   * §5.2.4): exact file names, dense empty backfill, single sorted file per
@@ -24,10 +55,26 @@ class RangeSinkSpec extends SparkSuite {
     new java.io.File(root).listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.getName).toSeq.sorted
 
+  /** `__range=X` staging dirs left under `_open`, over all epochs. */
+  private def stagedRanges(root: String): Seq[String] = {
+    val open = new java.io.File(s"$root/_open")
+    if (!open.exists()) Seq.empty
+    else open.listFiles().toSeq.filter(_.isDirectory)
+      .flatMap(_.listFiles().toSeq.map(_.getName))
+      .filter(_.startsWith("__range=")).sorted
+  }
+
+  private def footer(file: String): ParquetMetadata = {
+    val r = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new Path(file),
+        spark.sparkContext.hadoopConfiguration))
+    try r.getFooter finally r.close()
+  }
+
   test("scenario 1: blocks 100..130, size 10 → exact range file names") {
     val root = tmpDir()
     val sink = RangeSink(root, RangePartitioner(start = 100, size = 10))
-    sink.writeAll(blocksDF(100L until 130L))
+    sink.writeAll(blocksDF((100L until 130L).reverse))
     assert(published(root) == Seq(
       "0000000100-0000000110.parquet",
       "0000000110-0000000120.parquet",
@@ -77,11 +124,14 @@ class RangeSinkSpec extends SparkSuite {
     val firstListing = published(root)
     // crash-replay of the same epoch, then progress
     sink.processBatch(blocksDF(0L until 15L), epochId = 0)
+    // the replay restaged the published range 0; that staging is dead
+    assert(stagedRanges(root) == Seq("__range=10"))
     sink.processBatch(blocksDF(15L until 25L), epochId = 1)
     assert(published(root) == Seq(
       "0000000000-0000000010.parquet",
       "0000000010-0000000020.parquet"))
     assert(firstListing == Seq("0000000000-0000000010.parquet"))
+    assert(stagedRanges(root) == Seq("__range=20"))
     // no duplicated rows despite the replayed epoch
     val df = spark.read.parquet(s"$root/0000000010-0000000020.parquet")
     assert(df.select("block_number").collect().map(_.getLong(0)).toSeq ==
@@ -182,6 +232,143 @@ class RangeSinkSpec extends SparkSuite {
     // the older epoch's v values survived the merge
     assert(file.filter(col("v").isNotNull).count() == 5)
     assert(file.filter(col("tag").isNotNull).count() == 5)
+  }
+
+  test("a range staged by epochs 8..12 merges on the driver, as the Spark merge would") {
+    val root = tmpDir()
+    val sink = RangeSink(root, RangePartitioner(start = 100, size = 100))
+    // each epoch arrives unsorted; staging sorts it within the epoch
+    for (e <- 8 to 12) {
+      val lo = 100L + (e - 8) * 20
+      sink.processBatch(blocksDF((lo until lo + 20).reverse), epochId = e)
+    }
+    // what the Spark merge makes of the same staged epochs
+    val copies = (8 to 12).map { e =>
+      val copy = new java.io.File(tmpDir(), s"epoch$e")
+      org.apache.commons.io.FileUtils.copyDirectory(
+        new java.io.File(s"$root/_open/epoch=$e/__range=100"), copy)
+      copy.toString
+    }
+    val bySpark = spark.read.option("mergeSchema", "true").parquet(copies: _*)
+      .coalesce(1).sortWithinPartitions(col("block_number")).collect().toSeq
+    // epoch 13 only opens the next range, which closes range 100
+    val merges = RangeSinkSpec.sparkMerges(spark) {
+      sink.processBatch(blocksDF(200L until 205L), epochId = 13)
+    }
+    assert(merges == 0, "epochs 8..12 must merge on the driver, in numeric order")
+    val file = s"$root/0000000100-0000000200.parquet"
+    val rows = spark.read.parquet(file).collect().toSeq
+    assert(rows.map(_.getLong(0)) == (100L until 200L))
+    assert(rows == bySpark)
+    val meta = footer(file)
+    assert(meta.getBlocks.size == 1, "one row group for the whole range")
+    assert(meta.getFileMetaData.getKeyValueMetaData.asScala
+      .contains("org.apache.spark.sql.parquet.row.metadata"))
+    assert(stagedRanges(root) == Seq("__range=200"))
+  }
+
+  test("a range staged by 300 one-block epochs merges with one staged file open at a time") {
+    // on the in-memory object store, which counts open read streams
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.objstore.impl", classOf[ObjectStoreFileSystem].getName)
+    ObjectStore.reset()
+    val root = s"objstore:///sink-${System.nanoTime()}/main"
+    val sink = RangeSink(root, RangePartitioner(start = 0, size = 500))
+    // the staging of epochs 0..299, one block each, laid out in one
+    // write: one row, so one part file, per _open/epoch=N/__range=0
+    blocksDF(0L until 300L).withColumn("epoch", col("block_number"))
+      .withColumn("__range", lit(0L))
+      .write.partitionBy("epoch", "__range").parquet(s"$root/_open")
+    ObjectStore.openStreams.set(0)
+    ObjectStore.maxOpenStreams.set(0)
+    // epoch 300 only opens the next range, which closes range 0
+    val merges = RangeSinkSpec.sparkMerges(spark) {
+      sink.processBatch(blocksDF(500L until 501L), epochId = 300)
+    }
+    assert(merges == 0, "range 0 must merge on the driver")
+    assert(ObjectStore.maxOpenStreams.get() == 1,
+      s"staged files open at once: ${ObjectStore.maxOpenStreams.get()}")
+    val file = s"$root/0000000000-0000000500.parquet"
+    assert(spark.read.parquet(file).select("block_number").collect()
+      .map(_.getLong(0)).toSeq == (0L until 300L))
+    assert(footer(file).getBlocks.size == 1, "one row group for the whole range")
+    val staged = ObjectStore.keys.keysIterator.filter(_.contains("/__range=0/"))
+    assert(staged.isEmpty, "range 0's staging must be dropped once published")
+  }
+
+  test("staging unsorted within a file takes the Spark merge, which sorts") {
+    val root = tmpDir()
+    val sink = RangeSink(root, RangePartitioner(start = 0, size = 10))
+    // epoch 0 as staged before staging sorted by block: one file, 4..0
+    blocksDF((0L until 5L).reverse).coalesce(1)
+      .write.parquet(s"$root/_open/epoch=0/__range=0")
+    val merges = RangeSinkSpec.sparkMerges(spark) {
+      sink.processBatch(blocksDF(5L until 15L), epochId = 1)
+    }
+    assert(merges == 1, "out-of-order blocks must fall back to the Spark merge")
+    assert(published(root) == Seq("0000000000-0000000010.parquet"))
+    assert(spark.read.parquet(s"$root/0000000000-0000000010.parquet")
+      .select("block_number").collect().map(_.getLong(0)).toSeq == (0L until 10L))
+    assert(!new java.io.File(root).list().exists(_.endsWith(".inprogress")))
+  }
+
+  test("a stale .inprogress file from a crashed merge is overwritten") {
+    val root = tmpDir()
+    val sink = RangeSink(root, RangePartitioner(start = 0, size = 10))
+    sink.processBatch(blocksDF(0L until 5L), epochId = 0)
+    // a torn driver-side merge of range 0 (a file), and a crashed Spark
+    // merge of range 10 (a directory)
+    Files.write(java.nio.file.Paths.get(root,
+      ".0000000000-0000000010.parquet.inprogress"), "torn".getBytes)
+    Files.createDirectories(java.nio.file.Paths.get(root,
+      ".0000000010-0000000020.parquet.inprogress", "_temporary"))
+    val merges = RangeSinkSpec.sparkMerges(spark) {
+      sink.processBatch(blocksDF(5L until 15L), epochId = 1)
+      sink.processBatch(blocksDF(15L until 22L), epochId = 2)
+    }
+    assert(merges == 0)
+    assert(published(root) == Seq("0000000000-0000000010.parquet",
+      "0000000010-0000000020.parquet"))
+    assert(spark.read.parquet(s"$root/0000000000-0000000010.parquet")
+      .select("block_number").collect().map(_.getLong(0)).toSeq == (0L until 10L))
+    assert(spark.read.parquet(s"$root/0000000010-0000000020.parquet")
+      .select("block_number").collect().map(_.getLong(0)).toSeq == (10L until 20L))
+    assert(!new java.io.File(root).list().exists(_.endsWith(".inprogress")))
+  }
+
+  test("zstd level and row-group size reach the driver-merged file") {
+    import spark.implicits._
+    // every value distinct (defeats dictionary/RLE) but with internal
+    // redundancy, so the zstd level visibly changes the encoded size;
+    // 400 rows a block, two epochs in range [100, 200)
+    val rows = (0 until 20000).map(i =>
+      (100L + i / 400, s"prefix-common-text-$i-" + ("ab" * 40) + i * 31))
+    def epoch(lo: Long, hi: Long): DataFrame = rows
+      .filter { case (b, _) => b >= lo && b < hi }.toDF("block_number", "s")
+    def merged(tuning: ParquetTuning): java.io.File = {
+      val root = tmpDir()
+      val sink = RangeSink(root, RangePartitioner(start = 100, size = 100),
+        tuning = tuning)
+      val merges = RangeSinkSpec.sparkMerges(spark) {
+        sink.processBatch(epoch(100, 125), epochId = 0)
+        sink.processBatch(epoch(125, 200), epochId = 1)
+        sink.processBatch(Seq((200L, "x")).toDF("block_number", "s"), epochId = 2)
+      }
+      assert(merges == 0)
+      new java.io.File(root, "0000000100-0000000200.parquet")
+    }
+    def rowGroups(f: java.io.File): Int = footer(f.toString).getBlocks.size
+    val coarse = rowGroups(merged(ParquetTuning()))
+    val fine = rowGroups(merged(ParquetTuning(rowGroupBytes = Some(256 * 1024))))
+    assert(coarse == 1, s"default row-group sizing: $coarse")
+    assert(fine > coarse,
+      s"256 KB row groups must split the file: fine=$fine coarse=$coarse")
+    val fast = merged(ParquetTuning(compressionLevel = Some(1),
+      dictionaryEncoding = false)).length()
+    val max = merged(ParquetTuning(compressionLevel = Some(19),
+      dictionaryEncoding = false)).length()
+    assert(fast != max,
+      s"level must reach the codec: level1=$fast bytes, level19=$max bytes")
   }
 
   test("stop-block clamps the final range name (scenario 6)") {

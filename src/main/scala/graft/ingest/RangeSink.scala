@@ -10,6 +10,8 @@ import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.PrimitiveType
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, LogicalPlan, Project}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.parquet.ParquetCompressionCodec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -25,9 +27,16 @@ import org.apache.spark.sql.types.StructType
   *
   * Mechanics per micro-batch epoch:
   *  1. stage the epoch's rows under `_open/epoch=N/__range=X/` with
-  *     mode=overwrite — an epoch REPLAY after a crash overwrites its own
-  *     staging deterministically, which upgrades the reference's
-  *     at-most-once cursor (SURVEY.md §2.A#17) to exactly-once;
+  *     mode=overwrite, one block-sorted part file per range: an epoch in
+  *     one input partition (a single-partition source's epoch, as
+  *     foreachBatch hands it over) is written as it is, as the reference
+  *     appends each block to its range's open writer (writer.go:122-156);
+  *     an epoch in several partitions is first shuffled by range, since
+  *     its partitions may cut a range or interleave in it. An epoch
+  *     REPLAY after a crash overwrites its own staging, whatever either
+  *     attempt's partitioning (the overwrite drops the whole epoch dir),
+  *     which upgrades the reference's at-most-once cursor (SURVEY.md
+  *     §2.A#17) to exactly-once;
   *  2. every range strictly below the high-water range is complete
   *     (rotation-on-boundary-crossing, writer.go:127-144): publish it as
   *     ONE atomically-renamed, block-sorted, range-named file; re-publish
@@ -49,6 +58,10 @@ import org.apache.spark.sql.types.StructType
   * the range through the driver and buffers up to one row group
   * (`parquet.block.size`) on its heap, for each of up to 8 ranges
   * published at once, where the Spark merge does it on an executor.
+  * Staging never cuts a range into several files of one epoch, so the
+  * driver merge handles multi-epoch ranges only: re-encoding every cut
+  * range on the driver cost more than the shuffle it saves, wherever
+  * input partitions are not aligned with ranges.
   * Ordered-merge heaps and upload workers (§2.A#14/#18) are unnecessary:
   * epochs are totally ordered and rename-publish is the committer.
   */
@@ -141,8 +154,10 @@ final case class RangeSink(
     * recomputes the whole micro-batch, and in the batch path rescans the
     * source). */
   private def stageEpoch(df: DataFrame, epochId: Long): Seq[Long] = {
-    df.withColumn("__range", rangeExpr)
-      .repartition(col("__range"))
+    val ranged = df.withColumn("__range", rangeExpr)
+    // one partition holds each of its ranges whole: no shuffle. Several
+    // may cut or interleave a range, which the shuffle regroups
+    (if (onePartition(df)) ranged else ranged.repartition(col("__range")))
       // led by __range: the partitioned write needs its rows grouped by
       // __range and, were this sort not led by it, would sort them by
       // __range alone — and the optimizer would drop this block sort
@@ -153,6 +168,20 @@ final case class RangeSink(
     fs(df.sparkSession)
       .globStatus(new Path(s"$root/_open/epoch=$epochId/__range=*")).toSeq
       .map(_.getPath.getName.stripPrefix("__range=").toLong)
+  }
+
+  /** True when `df` is one partition, read off its analyzed plan without
+    * planning or running it: row-wise operators (projections, filters,
+    * explodes) over an RDD of one partition, the form in which
+    * foreachBatch hands over an epoch of a single-partition source. Any
+    * other plan may hold several partitions. */
+  private def onePartition(df: DataFrame): Boolean = {
+    def rowWise(p: LogicalPlan): Boolean = p match {
+      case r: LogicalRDD => r.rdd.getNumPartitions == 1
+      case _: Project | _: Filter | _: Generate => rowWise(p.children.head)
+      case _ => false
+    }
+    rowWise(df.queryExecution.analyzed)
   }
 
   /** foreachBatch entry point: stage this epoch, then finalize everything
@@ -263,7 +292,8 @@ final case class RangeSink(
     *
     * Publish cost is kept off the Spark scheduler wherever possible:
     *  - a range staged by a single epoch already IS one sorted parquet
-    *    file (stage repartitions by range and sorts within partitions) —
+    *    file (stage holds each range in one task, shuffling by range
+    *    unless the epoch is one partition, and sorts it by block) —
     *    publishing it is a pure filesystem rename, no job;
     *  - a range staged by several epochs whose files share one schema
     *    and hold their blocks in epoch order is merged on the driver

@@ -50,6 +50,8 @@ object Graph extends QueryFamily {
   // the cap branch LIVE at sf0.1 (max co-purchase degree 59 there) so
   // the oracle sweep exercises the exclusion path, not just GraphSpec.
   private val HubCap = 48L
+  // a (src, dst) edge row of two longs, for LoopState.adaptiveParts
+  private val EdgeBytesPerRow = 16L
 
   /** Distinct supplier↔customer trade pairs, symmetrized into a directed
     * edge list `(src, dst)`. One pass builds both directions (explode of
@@ -389,7 +391,9 @@ object Graph extends QueryFamily {
     val parts = math.max(1,
       spark.conf.get("spark.sql.shuffle.partitions", "200").toInt)
     val hotCut = math.max(hotDegFloor, hotDegFactor * m / parts)
-    val hotKeys: Array[Long] =
+    // with each hub's degree: symmetrized, a hub's degree is the number
+    // of edges whose dst it is, so the hot-edge rows are their sum
+    val hot: Array[(Long, Long)] =
       if (maxDeg <= hotCut) Array.empty
       else {
         import spark.implicits._
@@ -398,8 +402,9 @@ object Graph extends QueryFamily {
         // correct, just less even)
         nodes.filter(col("deg") > hotCut)
           .orderBy(col("deg").desc, col("node"))
-          .limit(maxHotKeys).select("node").as[Long].collect()
+          .limit(maxHotKeys).select("node", "deg").as[(Long, Long)].collect()
       }
+    val hotKeys = hot.map(_._1)
     val (edgesCold, edgesHot) =
       if (hotKeys.isEmpty) (edges, None)
       else {
@@ -412,10 +417,15 @@ object Graph extends QueryFamily {
         // Materialize both (one pass over the parent cache), then drop
         // the parent so the loop holds one copy of the graph.
         val cold = edges.filter(!isHot).cache()
-        val hot = edges.filter(isHot).repartition(col("src")).cache()
-        cold.count(); hot.count()
+        // sized from the hot-edge rows, not the session constant: a
+        // cache build bypasses AQE coalescing (LoopState.adaptiveParts)
+        val hotParts = LoopState.adaptiveParts(spark, hot.map(_._2).sum,
+          EdgeBytesPerRow)
+        val hotEdges = edges.filter(isHot)
+          .repartition(hotParts, col("src")).cache()
+        cold.count(); hotEdges.count()
         edges.unpersist()
-        (cold, Some(hot))
+        (cold, Some(hotEdges))
       }
     var labels = nodes.select(col("node"), col("node").as("label"))
     var it = 0

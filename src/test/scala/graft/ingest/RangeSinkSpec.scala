@@ -1,7 +1,7 @@
 package graft.ingest
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
@@ -18,24 +18,27 @@ import org.apache.spark.sql.functions._
 import graft.SparkSuite
 
 object RangeSinkSpec {
-  /** Spark merge jobs that `body` ran: RangeSink's job-based merge writes
-    * into `.<range>.parquet.inprogress`, and the plan of that write's SQL
-    * execution names the path. */
-  def sparkMerges(spark: SparkSession)(body: => Unit): Int = {
-    val seen = new AtomicInteger
+  /** The physical plans of the SQL executions that `body` ran. */
+  def sqlPlans(spark: SparkSession)(body: => Unit): Seq[String] = {
+    val plans = new ConcurrentLinkedQueue[String]
     val listener = new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart
-            if s.physicalPlanDescription.contains(".parquet.inprogress") =>
-          seen.incrementAndGet()
+        case s: SparkListenerSQLExecutionStart =>
+          plans.add(s.physicalPlanDescription)
         case _ =>
       }
     }
     spark.sparkContext.addSparkListener(listener)
     try { body; TestListenerBus.drain(spark.sparkContext) }
     finally spark.sparkContext.removeSparkListener(listener)
-    seen.get
+    plans.asScala.toSeq
   }
+
+  /** Spark merge jobs that `body` ran: RangeSink's job-based merge writes
+    * into `.<range>.parquet.inprogress`, and the plan of that write's SQL
+    * execution names the path. */
+  def sparkMerges(spark: SparkSession)(body: => Unit): Int =
+    sqlPlans(spark)(body).count(_.contains(".parquet.inprogress"))
 }
 
 /** Range-named sink fixtures (FIXTURES.md §B scenarios 1, 2, 4; SURVEY.md
@@ -50,6 +53,20 @@ class RangeSinkSpec extends SparkSuite {
     import spark.implicits._
     nums.map(n => (n, s"0x$n", n * 10)).toDF("block_number", "block_id", "v")
   }
+
+  /** Blocks `0 until n` in `parts` contiguous input partitions. */
+  private def blocksIn(n: Long, parts: Int): DataFrame =
+    spark.range(0, n, 1, parts).select(col("id").as("block_number"),
+      concat(lit("0x"), col("id")).as("block_id"), (col("id") * 10).as("v"))
+
+  /** `df` as foreachBatch hands an epoch over: an RDD's rows, in `df`'s
+    * partitions. */
+  private def asEpoch(df: DataFrame): DataFrame =
+    spark.createDataFrame(df.rdd, df.schema)
+
+  private def blocksOf(file: String): Seq[Long] =
+    spark.read.parquet(file).select("block_number").collect()
+      .map(r => r.getAs[Number](0).longValue).toSeq
 
   private def published(root: String): Seq[String] =
     new java.io.File(root).listFiles()
@@ -310,6 +327,110 @@ class RangeSinkSpec extends SparkSuite {
     assert(spark.read.parquet(s"$root/0000000000-0000000010.parquet")
       .select("block_number").collect().map(_.getLong(0)).toSeq == (0L until 10L))
     assert(!new java.io.File(root).list().exists(_.endsWith(".inprogress")))
+  }
+
+  test("an epoch in one input partition stages without a shuffle") {
+    val epoch = asEpoch(blocksIn(40, 1))
+    // the main table's form and an exploded child table's form
+    for (df <- Seq(epoch, epoch.withColumn("v", explode(array(col("v"), col("v") + 1))))) {
+      val root = tmpDir()
+      val sink = RangeSink(root, RangePartitioner(start = 0, size = 25))
+      var merges = 0
+      val plans = RangeSinkSpec.sqlPlans(spark) {
+        merges = RangeSinkSpec.sparkMerges(spark) {
+          sink.processBatch(df, epochId = 0)
+        }
+      }
+      val staging = plans.filter(_.contains("_open/epoch="))
+      assert(staging.nonEmpty, "no staging write seen")
+      assert(!staging.exists(_.contains("Exchange")),
+        s"staging must not shuffle:\n${staging.mkString("\n")}")
+      assert(merges == 0)
+      assert(published(root) == Seq("0000000000-0000000025.parquet"))
+      val file = s"$root/0000000000-0000000025.parquet"
+      assert(blocksOf(file).distinct == (0L until 25L))
+      assert(blocksOf(file) == blocksOf(file).sorted)
+      assert(stagedRanges(root) == Seq("__range=25"))
+    }
+  }
+
+  test("an epoch in several input partitions is shuffled by range, one file per range") {
+    val inputs = Seq(
+      // partitions of 10 blocks: their boundaries cut range 0 twice
+      "contiguous" -> blocksIn(40, 4),
+      "epoch" -> asEpoch(blocksIn(40, 4)),
+      // round-robin: every partition holds every 4th block of both ranges
+      "round-robin" -> blocksIn(40, 1).repartition(4))
+    for ((name, df) <- inputs) {
+      val root = tmpDir()
+      val sink = RangeSink(root, RangePartitioner(start = 0, size = 25))
+      var merges = 0
+      val plans = RangeSinkSpec.sqlPlans(spark) {
+        merges = RangeSinkSpec.sparkMerges(spark) {
+          sink.processBatch(df, epochId = 0)
+        }
+      }
+      assert(plans.filter(_.contains("_open/epoch=")).exists(_.contains("Exchange")),
+        s"$name: staging must shuffle by range")
+      assert(merges == 0, s"$name: a range staged as one file is renamed")
+      val file = s"$root/0000000000-0000000025.parquet"
+      assert(blocksOf(file) == (0L until 25L), name)
+      assert(footer(file).getBlocks.size == 1, s"$name: one row group")
+      val open = new java.io.File(s"$root/_open/epoch=0/__range=25")
+      assert(open.list().count(_.startsWith("part-")) == 1,
+        s"$name: range 25 must stage as one file")
+    }
+  }
+
+  test("input partitions aligned with ranges publish by rename alone") {
+    // on the object store, where a read of a staged file is counted
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.objstore.impl", classOf[ObjectStoreFileSystem].getName)
+    ObjectStore.reset()
+    val root = s"objstore:///sink-${System.nanoTime()}/main"
+    val sink = RangeSink(root, RangePartitioner(start = 0, size = 25))
+    val merges = RangeSinkSpec.sparkMerges(spark) {
+      sink.writeAll(blocksIn(100, 4))
+    }
+    assert(merges == 0)
+    assert(ObjectStore.maxOpenStreams.get() == 0,
+      "no staged file may be read: each range is one part file, renamed")
+    for (rs <- 0L until 100L by 25L)
+      assert(blocksOf(s"$root/${"%010d-%010d".format(rs, rs + 25)}.parquet") ==
+        (rs until rs + 25))
+  }
+
+  test("a multi-epoch range with a decimal block column takes the Spark merge") {
+    val root = tmpDir()
+    val sink = RangeSink(root, RangePartitioner(start = 0, size = 25))
+    def dec(df: DataFrame) =
+      df.withColumn("block_number", col("block_number").cast("decimal(20,0)"))
+    val merges = RangeSinkSpec.sparkMerges(spark) {
+      sink.processBatch(dec(asEpoch(blocksIn(10, 1))), epochId = 0)
+      sink.processBatch(dec(asEpoch(blocksIn(40, 1)).filter(col("block_number") >= 10)),
+        epochId = 1)
+    }
+    assert(merges == 1, "only an int64 block column merges on the driver")
+    assert(published(root) == Seq("0000000000-0000000025.parquet"))
+    assert(blocksOf(s"$root/0000000000-0000000025.parquet") == (0L until 25L))
+  }
+
+  test("a replay staged from fewer partitions than the crashed attempt lands each block once") {
+    val root = tmpDir()
+    val sink = RangeSink(root, RangePartitioner(start = 0, size = 25))
+    // epoch 3's first attempt, staged from 4 partitions without a shuffle,
+    // then a crash before any publish: ranges 0 and 25 staged as 3 and 2
+    // files
+    blocksIn(40, 4).withColumn("__range", expr("(block_number div 25) * 25"))
+      .sortWithinPartitions(col("__range"), col("block_number"))
+      .write.partitionBy("__range").parquet(s"$root/_open/epoch=3")
+    // the replay of epoch 3 comes from one partition; epoch 4 closes 25
+    sink.processBatch(asEpoch(blocksIn(40, 1)), epochId = 3)
+    sink.processBatch(blocksDF(Seq(50L)), epochId = 4)
+    assert(published(root) == Seq("0000000000-0000000025.parquet",
+      "0000000025-0000000050.parquet"))
+    assert(blocksOf(s"$root/0000000000-0000000025.parquet") == (0L until 25L))
+    assert(blocksOf(s"$root/0000000025-0000000050.parquet") == (25L until 40L))
   }
 
   test("a stale .inprogress file from a crashed merge is overwritten") {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSuite
-import graft.ingest.{ProtoWire, RangePartitioner, TestMessages}
+import graft.ingest.{ProtoWire, RangePartitioner, SampleBlocks, TestMessages}
 
 /** End-to-end streaming ingest (SURVEY.md §3.1-3.2 restated): encoded
   * proto blocks → MemoryStream → decode → main + exploded child tables →
@@ -62,6 +62,31 @@ class BlockPipelineSpec extends SparkSuite {
     assert(touched.columns.toSeq ==
       Seq("block_number", "block_id", "touched_accounts"))
     assert(touched.count() == 20) // 2 per block
+  }
+
+  test("a single-partition source's epochs stage every table without a shuffle") {
+    val root = Files.createTempDirectory("pipeline-1p").toString
+    val checkpoint = Files.createTempDirectory("pipeline-1p-ckpt").toString
+    // the simulated chain: one input partition per epoch
+    val blocks = spark.readStream.format("graft.sources.BlockStreamProvider")
+      .option("numBlocks", "60").option("blocksPerBatch", "20").load()
+    val plans = graft.ingest.RangeSinkSpec.sqlPlans(spark) {
+      val query = BlockPipeline.start(blocks, SampleBlocks.output, root,
+        RangePartitioner(start = 0, size = 10), checkpoint, explode = true,
+        trigger = Trigger.ProcessingTime(0))
+      try query.processAllAvailable() finally query.stop()
+    }
+    val staging = plans.filter(_.contains("_open/epoch="))
+    // three epochs of 20 blocks, three tables each
+    assert(staging.size >= 9, s"staging writes seen: ${staging.size}")
+    assert(!staging.exists(_.contains("Exchange")),
+      s"staging must not shuffle:\n${staging.mkString("\n")}")
+    def files(table: String): Seq[String] =
+      new java.io.File(s"$root/$table").listFiles()
+        .filter(_.getName.endsWith(".parquet")).map(_.getName).toSeq
+    // blocks 1..60: ranges 0..50 published, range 60 still open
+    assert(files("main").size == 6)
+    assert(spark.read.parquet(s"$root/main").count() == 59)
   }
 
   test("restart from checkpoint resumes without duplicates") {

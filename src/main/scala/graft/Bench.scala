@@ -2,7 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+
 import graft.ingest.{Decode, RangePartitioner, RangeSink, SampleBlocks}
+import graft.streaming.NearDupStage
 
 /** Bench harness: wall-clock per declared query on SPARK_GRAFT_SF_DIR,
   * ONE compact JSON line as the LAST stdout output (driver contract —
@@ -85,9 +89,7 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** The ingest-throughput probe, shared by the suite bench and
-    * [[BenchIngest]] (the quiet-host re-stamp runs the SAME
-    * measurement in a fresh JVM — one definition, no drift). */
+  /** The ingest-throughput probe behind `ingest_blocks_per_sec`. */
   def ingestThroughput(spark: org.apache.spark.sql.SparkSession,
       runs: Int): Double = {
     val nBlocks = 100000L
@@ -214,13 +216,13 @@ object Bench {
     val ingestBps = try ingestThroughput(spark, runs)
       catch { case _: Throwable => -1.0 }
     // streaming near-dup throughput (docs/s) at TWO corpus sizes, each
-    // best-of-N over ProfileCorpus's measured pass (signature + banding +
+    // best-of-N over the measured pass `onePass` (signature + banding +
     // registry join + claim write ∥ sink count) — same isolated protocol
     // as queries, so the round-over-round 2× claim is reproducible
     def corpusDps(nDocs: Long): Double = try {
-      val corpus = ProfileCorpus.docs(spark, nDocs).persist()
+      val corpus = docs(spark, nDocs).persist()
       corpus.count()
-      val dps = (1 to runs).map(_ => ProfileCorpus.onePass(corpus, nDocs)._1).max
+      val dps = (1 to runs).map(_ => onePass(corpus, nDocs)._1).max
       corpus.unpersist()
       dps
     } catch { case _: Throwable => -1.0 }
@@ -323,6 +325,41 @@ object Bench {
       s""""ingest_blocks_per_sec":${f"$ingestBps%.0f"},""" +
       s""""sf":"$sfDir","runs":$runs,"queries_full":"BENCH_full.json"}""")
     println(line)
+  }
+
+  /** Synthetic near-dup corpus, generated ON the executors: ~100-token
+    * documents; every 5th doc is a near-duplicate (one token changed) of
+    * an earlier doc in the SAME quarter, every 11th an exact duplicate
+    * from a PREVIOUS quarter — so both the in-batch and the cross-batch
+    * collision paths carry real traffic. */
+  private def docs(spark: SparkSession, n: Long): DataFrame = {
+    import spark.implicits._
+    spark.range(0L, n).map { i =>
+      val base = i - (i % 5)    // every 5th doc shadows its group head
+      val seed = if (i % 5 == 0 || i % 11 != 0) base else base % 997
+      val toks = (1 to 100).map(t => s"w${seed}_$t").toArray
+      if (i % 5 != 0 && i % 5 < 3) toks(50) = s"CHANGED$i" // near-dup
+      (i, new java.sql.Timestamp(1700000000000L + i * 1000L),
+        toks.mkString(" "), s"src${i % 7}")
+    }.toDF("doc_id", "ts", "text", "source")
+  }
+
+  /** One measured pass: nDocs in 4 epoch batches through NearDupStage
+    * (fresh registry) via processWith, counting survivors as the sink.
+    * Returns (docs/s, kept). */
+  private def onePass(corpus: DataFrame, nDocs: Long): (Double, Long) = {
+    val reg = Files.createTempDirectory("prof-corpus").toString + "/registry"
+    val stage = NearDupStage(reg, watermarkMs = 3600L * 1000L)
+    val quarter = nDocs / 4
+    val t0 = System.nanoTime()
+    var kept = 0L
+    for (e <- 0 until 4) {
+      val batch = corpus
+        .filter(col("doc_id") >= e * quarter &&
+          col("doc_id") < (e + 1) * quarter)
+      stage.processWith(batch, e.toLong)(s => kept += s.count())
+    }
+    (nDocs / ((System.nanoTime() - t0) / 1e9), kept)
   }
 
   private def readMins(path: String, sfDir: String): Map[String, Double] =

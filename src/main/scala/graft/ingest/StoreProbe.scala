@@ -34,14 +34,4 @@ object StoreProbe {
       case e: Exception => ProbeResult(ok = false, s"${e.getClass.getSimpleName}: ${e.getMessage}")
     }
   }
-
-  def main(args: Array[String]): Unit = {
-    if (args.length != 1) {
-      System.err.println("usage: graft.ingest.StoreProbe <store_url>")
-      sys.exit(2)
-    }
-    val r = probe(args(0))
-    println(s"[setup] ${if (r.ok) "OK" else "FAILED"}: ${r.detail}")
-    if (!r.ok) sys.exit(1)
-  }
 }

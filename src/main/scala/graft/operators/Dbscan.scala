@@ -34,7 +34,8 @@ import graft.functions.Vectors
   * exchange, no cartesian — plan-guarded), candidates per query are
   * capped at probes·n/kCells, and kCells scales with n, so total
   * candidate volume is ~probes·n·targetCellSize — linear in the corpus
-  * at fixed probes (ProfileDbscan measures the 10× sweep). Cosine-ball
+  * at fixed probes (PLANS.md records the 10× sweep: 3906 → 3965
+  * candidates per vector from 20k to 200k vectors). Cosine-ball
   * edge recall under multi-probe is the [[SemDedup]] regime: near
   * neighbors share coarse cells by construction.
   */

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** MinHash banding — THE shared candidate generator for the LSH dedup
-  * family (`Llm.lshCascade`, the sweep harness `ProfileDedup`), so the
+  * family (`Llm.lshCascade` and LlmSpec's recall-dial test), so the
   * banding math, its validation, and its join pins cannot drift between
   * call sites (they did, once — PLANS round 6).
   *

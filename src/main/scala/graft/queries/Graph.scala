@@ -178,7 +178,7 @@ object Graph extends QueryFamily {
     // minQty dials the basket density: the declared query runs the
     // qty>30 projection (bench-sized; the full graph's wedge join is
     // ~9x the work for the same plan shape — GraphSpec pins the
-    // unfiltered counts, ProfileQ measures both)
+    // unfiltered counts)
     val li = Tables.lineitem(s, d)
       .filter(col("l_quantity") > minQty)
       .select(col("l_orderkey"), col("l_partkey"))

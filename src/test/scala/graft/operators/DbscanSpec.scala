@@ -14,10 +14,10 @@ class DbscanSpec extends SparkSuite {
 
   private val dim = 48
 
-  /** Clustered unit vectors — graft.ProfileDbscan.corpus, the ONE
+  /** Clustered unit vectors — graft.TestCorpora.clustered, the ONE
     * shared fixture generator, at this spec's noise scale. */
   private def corpus(n: Int, kGroups: Int) =
-    graft.ProfileDbscan.corpus(spark, n.toLong, dim, kGroups,
+    graft.TestCorpora.clustered(spark, n.toLong, dim, kGroups,
       noise = 0.25)
 
   private def pairSet(df: org.apache.spark.sql.DataFrame) = {

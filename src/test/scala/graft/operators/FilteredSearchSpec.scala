@@ -14,10 +14,10 @@ class FilteredSearchSpec extends SparkSuite {
   private val k = 10
 
   /** 2000 clustered unit vectors, 12 planted directions —
-    * graft.ProfileDbscan.corpus, the ONE shared fixture generator, at
+    * graft.TestCorpora.clustered, the ONE shared fixture generator, at
     * this spec's noise scale. */
   private lazy val corpus: DataFrame =
-    graft.ProfileDbscan.corpus(spark, 2000L, dim, kGroups = 12,
+    graft.TestCorpora.clustered(spark, 2000L, dim, kGroups = 12,
       noise = 0.3).localCheckpoint()
 
   private lazy val queries: DataFrame = corpus

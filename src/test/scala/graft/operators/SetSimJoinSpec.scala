@@ -115,9 +115,9 @@ class SetSimJoinSpec extends SparkSuite {
 
   test("router: boiler profiles hot -> prefix path, clean -> naive; " +
       "all three exact variants agree on both corpora") {
-    val boiler = graft.ProfileDedup.corpus(spark, "boiler", 400)
+    val boiler = graft.TestCorpora.shingleSets(spark, "boiler", 400)
       .localCheckpoint()
-    val clean = graft.ProfileDedup.corpus(spark, "clean", 400)
+    val clean = graft.TestCorpora.shingleSets(spark, "clean", 400)
       .localCheckpoint()
     val pb = SetSimJoin.dfProfile(boiler)
     val pc = SetSimJoin.dfProfile(clean)

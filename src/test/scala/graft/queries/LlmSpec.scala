@@ -78,7 +78,7 @@ class LlmSpec extends SparkSuite {
       .select(col("doc_id"), size(col("sset")).as("n"), col("sset"))
     val truth = (0 until 300).map(g => (2L * g, 2L * g + 1)).toSet
     def recall(nBands: Int): Double = {
-      val c = graft.ProfileDedup.lshCandidates(docs, nBands)
+      val c = graft.operators.Lsh.bandCandidates(docs, nBands)
         .as[(Long, Long)].collect().toSet
       c.intersect(truth).size.toDouble / truth.size
     }
